@@ -657,7 +657,9 @@ def _perceptron_sql() -> str:
     """Unrolled PERC_EPOCHS-epoch batch perceptron: each epoch is a
     scalar CTE whose misclassification predicate references the previous
     epoch's weights as scalar subqueries — the same fold-the-readback
-    pattern as the kmeans_train oracle, in pure SQL."""
+    pattern as the kmeans_train oracle, in pure SQL. Each epoch reads the
+    previous one ~24 times, so MATERIALIZED (on the epochs and on the
+    feature CTE ``l``) stops the exponential CTE inlining of the chain."""
     from kremis_spark.plans.scrub import (
         GOPHER_MAX_WORDS,
         GOPHER_MIN_DISTINCT_PERMILLE,
@@ -683,7 +685,7 @@ f AS (
                WHERE x IN {stops_in}) AS BIGINT) AS stops
   FROM t
 ),
-l AS (
+l AS MATERIALIZED (
   SELECT x1, x2, x3,
          CASE WHEN x1 >= {GOPHER_MIN_WORDS} AND x1 <= {GOPHER_MAX_WORDS}
                AND x2 * 1000 >= x1 * {GOPHER_MWL_LO}
@@ -705,7 +707,7 @@ l AS (
             )
         base = f"(SELECT {{c}} FROM {prev})" if prev else "0"
         parts.append(f""",
-e{e} AS (
+e{e} AS MATERIALIZED (
   SELECT COUNT(*) AS n,
          SUM(CASE WHEN y * ({margin}) <= 0 THEN 1 ELSE 0 END) AS n_mis,
          {base.format(c='wb')}

@@ -105,9 +105,10 @@ def test_perceptron_step_matches_local_reference(spark):
 @pytest.mark.parametrize("name", ["pipe_c4_rules", "pipe_perceptron_step"])
 def test_round9_oracles_run_in_duckdb(name):
     """The oracle SQL parses and runs standalone (schema drift guard)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
 
     sql = e.oracle_sql()[name]

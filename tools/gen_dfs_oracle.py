@@ -17,11 +17,12 @@ kremis_spark/plans/graph_queries.py.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kremis_spark.plans.graph_queries import (  # noqa: E402
     FILTER_MIN_WEIGHT,

@@ -1,7 +1,7 @@
 """Isolated fresh-session probe: time named queries at an SF, report
 per-rep times and executor storage footprint between queries."""
 import os, sys, time, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 from kremis_spark.session import get_spark
 
